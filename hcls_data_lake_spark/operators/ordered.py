@@ -305,7 +305,10 @@ def grouped_running_max(
     max over the group's global running sum.
 
     Requires at least one row per group (true by construction when the
-    groups come from the data) and a NON-NULL bigint/double ``value``.
+    groups come from the data), a NON-NULL bigint/double ``value`` and
+    no NaN ``grp`` key: the map pass keys each group's carry state by
+    its Python value, and NaN != NaN, so a NaN group would restart its
+    running sum at every Arrow batch boundary.
     """
     import pyarrow as pa
 

@@ -13,13 +13,12 @@ probed cells, at a recall cost tuned by n_probe/n_planes.
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hcls_data_lake_spark.operators.materialize import BuildOnceCache
 from hcls_data_lake_spark.tables import widen_scan
 
 
@@ -202,10 +201,18 @@ def lsh_bucket(vec_col: str, planes: list[list[float]]) -> Column:
 # indistinguishable — parquet writers practically never do that (part
 # files carry job UUIDs), and exact cosine re-ranking keeps results
 # valid regardless; only recall/reproducibility would shift. Non-file
-# sources (no inputFiles) skip the cache entirely. The cache is capped
-# (FIFO eviction) and clearable via clear_codebook_cache().
-_CODEBOOK_CACHE: dict[tuple, list[list[float]]] = {}
-_CODEBOOK_CACHE_MAX = 32
+# sources (no inputFiles) skip the cache entirely.
+_CODEBOOK_CACHE = BuildOnceCache(32)
+
+# finished per-candidate index state (cells / PQ codes / reconstructed
+# norms), keyed like the codebooks plus the owning session. This is
+# FAISS's add()/search() split: encoding every candidate is INDEX BUILD
+# and happens once per (table, params); a probe only reads the finished
+# code table. Without it every search re-ran the k_codes-centroid
+# argmin per candidate — at sf0.1 that encode pass was ~70% of PQ
+# search wall time, and at 100 TB it would turn each query into a full
+# re-index.
+_INDEX_CACHE = BuildOnceCache(16)
 
 
 def _table_fingerprint(df: DataFrame) -> tuple | None:
@@ -237,85 +244,7 @@ def clear_codebook_cache() -> None:
     after a table rewrite that kept its file names, or to bound memory
     in a long-lived driver)."""
     _CODEBOOK_CACHE.clear()
-    while _INDEX_CACHE:
-        _, df = _INDEX_CACHE.popitem(last=False)
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # owning session already stopped
-
-
-# finished per-candidate index state (cells / PQ codes / reconstructed
-# norms), localCheckpointed and keyed like the codebooks plus the owning
-# SparkSession (checkpoint blocks live in that session's executors).
-# This is FAISS's add()/search() split: encoding every candidate is
-# INDEX BUILD and happens once per (table, params); a probe only reads
-# the finished code table. Without it every search re-ran the
-# k_codes-centroid argmin per candidate — at sf0.1 that encode pass was
-# ~70% of PQ search wall time, and at 100 TB it would turn each query
-# into a full re-index.
-_INDEX_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
-_INDEX_CACHE_MAX = 16
-
-
-def _cached_index(cache_key: tuple, spark, builder):
-    """Get-or-build for materialized index DataFrames. ``cache_key[0]
-    is None`` (no stable table identity) skips caching — same contract
-    as :func:`_cached_codebook`.
-
-    Entries are persisted (MEMORY_AND_DISK) rather than
-    localCheckpointed so eviction can DETERMINISTICALLY free the
-    executor blocks via unpersist — a checkpointed RDD's blocks only
-    die when the driver GC happens to collect the reference, which at
-    16 evictions × an encoded corpus each is an executor-storage leak.
-    The session component of the key is the applicationId (unique per
-    SparkContext), not id(session): id() addresses are reused by the
-    allocator, and a recycled address plus an identical table
-    fingerprint would hand out a DataFrame bound to a dead session."""
-    ident = cache_key[0]
-    app_id = spark.sparkContext.applicationId
-    key = (app_id,) + cache_key if ident else None
-    # Entries keyed by a different applicationId belong to a stopped
-    # SparkContext: their persisted blocks are already gone, but the
-    # driver-side DataFrame references linger, pin JVM objects, and
-    # occupy live-session cache slots until FIFO happens to reach
-    # them. Drop them eagerly (ADVICE r4) — nothing to unpersist, the
-    # owning context is dead.
-    for stale in [k for k in _INDEX_CACHE if k[0] != app_id]:
-        del _INDEX_CACHE[stale]
-    if key is not None and key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
-    built = builder()
-    if key is None:
-        return built
-    built = built.persist()
-    built.count()  # materialize now: probes must read, never rebuild
-    while len(_INDEX_CACHE) >= _INDEX_CACHE_MAX:
-        _, evicted = _INDEX_CACHE.popitem(last=False)
-        try:
-            evicted.unpersist()
-        except Exception:
-            pass  # owning session already stopped
-    _INDEX_CACHE[key] = built
-    return built
-
-
-def _cached_codebook(cache_key: tuple, builder):
-    """Shared get-or-train for every codebook family (IVF coarse, PQ
-    subspace): one place owns the ident-guard, the FIFO eviction and
-    the put — a missed site would silently retrain per probe, the
-    exact cost the cache exists to avoid. ``cache_key[0] is None``
-    (no file identity) skips caching entirely."""
-    ident = cache_key[0]
-    cached = _CODEBOOK_CACHE.get(cache_key) if ident else None
-    if cached is not None:
-        return cached
-    built = builder()
-    if ident:
-        while len(_CODEBOOK_CACHE) >= _CODEBOOK_CACHE_MAX:
-            _CODEBOOK_CACHE.pop(next(iter(_CODEBOOK_CACHE)))
-        _CODEBOOK_CACHE[cache_key] = built
-    return built
+    _INDEX_CACHE.clear()
 
 
 def ivf_topk(
@@ -341,7 +270,7 @@ def ivf_topk(
     (table, params) — build once, probe many."""
     if train_iters > 0:
         ident = _table_fingerprint(embeddings)
-        cents = _cached_codebook(
+        cents = _CODEBOOK_CACHE.get_or_build(
             (ident, n_centroids, vec_col, train_iters, seed, sample_frac),
             lambda: kmeans_codebook(
                 embeddings, n_centroids, vec_col=vec_col, iters=train_iters,
@@ -365,13 +294,13 @@ def ivf_topk(
     # candidate are map-side CPU that the unsplittable fixture parquet
     # would otherwise run in ONE scan task; the tiny probe side stays
     # on the raw scan (brute_force_topk's side rule).
-    indexed = _cached_index(
+    indexed = _INDEX_CACHE.get_or_build(
         (ident, "ivfcells", n_centroids, id_col, vec_col, train_iters, seed,
          sample_frac),
-        embeddings.sparkSession,
         lambda: widen_scan(e0).withColumn(
             "cell", _cell_scores("_v", cents).getItem(0)
         ).withColumn("_cc", dot("_v", "_v")),
+        embeddings.sparkSession,
     )
     q = e0.filter(query_filter) if query_filter is not None else e0
     probes = q.select(
@@ -726,7 +655,7 @@ def pq_adc_topk(
     + refine); plain ADC (rerank=0) is the zero-extra-IO variant."""
     _check_rerank(rerank, k)
     ident = _table_fingerprint(embeddings)
-    books = _cached_codebook(
+    books = _CODEBOOK_CACHE.get_or_build(
         (ident, "pq", m_sub, k_codes, vec_col, train_iters, seed, sample_frac),
         lambda: pq_codebooks(
             embeddings, m_sub, k_codes, vec_col=vec_col, iters=train_iters,
@@ -745,14 +674,14 @@ def pq_adc_topk(
     # norm, once per candidate — never per (query, candidate) pair —
     # and materialized once per (table, params): probes read the
     # finished code table (FAISS add()/search() split)
-    cands = _cached_index(
+    cands = _INDEX_CACHE.get_or_build(
         (ident, "pqcodes", m_sub, k_codes, id_col, vec_col, train_iters, seed,
          sample_frac),
-        embeddings.sparkSession,
         lambda: e.select(
             F.col("_id").alias("neighbor_id"),
             pq_encode_col("_v", books).alias("cd"),
         ).withColumn("_cn2", _pq_norm_sq("cd", books)),
+        embeddings.sparkSession,
     )
     q = e0.filter(query_filter) if query_filter is not None else e0
     # per-query state on the broadcast side: the ADC LUT + norm, once
@@ -801,14 +730,14 @@ def ivfpq_topk(
     build-once trainers (kmeans_codebook / pq_codebooks)."""
     _check_rerank(rerank, k)
     ident = _table_fingerprint(embeddings)
-    cents = _cached_codebook(
+    cents = _CODEBOOK_CACHE.get_or_build(
         (ident, n_centroids, vec_col, train_iters, seed, sample_frac),
         lambda: kmeans_codebook(
             embeddings, n_centroids, vec_col=vec_col, iters=train_iters,
             seed=seed, sample_frac=sample_frac,
         ),
     )
-    books = _cached_codebook(
+    books = _CODEBOOK_CACHE.get_or_build(
         (ident, "pq", m_sub, k_codes, vec_col, train_iters, seed, sample_frac),
         lambda: pq_codebooks(
             embeddings, m_sub, k_codes, vec_col=vec_col, iters=train_iters,
@@ -827,15 +756,15 @@ def ivfpq_topk(
     # the only per-candidate state the search ever reads before refine)
     # plus the reconstructed norm — computed once per candidate and
     # materialized once per (table, params) like the codebooks
-    indexed = _cached_index(
+    indexed = _INDEX_CACHE.get_or_build(
         (ident, "ivfpqcodes", n_centroids, m_sub, k_codes, id_col, vec_col,
          train_iters, seed, sample_frac),
-        embeddings.sparkSession,
         lambda: e.select(
             F.col("_id").alias("neighbor_id"),
             _cell_scores("_v", cents).getItem(0).alias("cell"),
             pq_encode_col("_v", books).alias("cd"),
         ).withColumn("_cn2", _pq_norm_sq("cd", books)),
+        embeddings.sparkSession,
     )
     q = e0.filter(query_filter) if query_filter is not None else e0
     probes = q.select(

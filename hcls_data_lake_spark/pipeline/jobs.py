@@ -85,6 +85,28 @@ def _swap_zone(zone_path: str, tmp: str) -> None:
     shutil.rmtree(old)
 
 
+def _rewrite_zone(
+    df: DataFrame, empty: bool, zone_path: str, suffix: str, partition_col: str | None
+) -> None:
+    """Write ``df`` to the sibling temp dir ``<zone><suffix>`` and swap it
+    in (``_swap_zone``), keeping the hive layout if ``partition_col``."""
+    import shutil
+
+    tmp = zone_path.rstrip("/") + suffix
+    shutil.rmtree(tmp, ignore_errors=True)
+    if empty:
+        # a zero-row PARTITIONED write emits only _SUCCESS, which is
+        # unreadable (UNABLE_TO_INFER_SCHEMA); one un-partitioned empty
+        # part file keeps the zone readable with its schema
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    else:
+        writer = df.write.mode("overwrite")
+        if partition_col:
+            writer = writer.partitionBy(partition_col)
+        writer.parquet(tmp)
+    _swap_zone(zone_path, tmp)
+
+
 def compact_zone(
     spark: SparkSession,
     zone_path: str,
@@ -110,7 +132,6 @@ def compact_zone(
     """
     import math
     import os
-    import shutil
 
     def _count_files(root: str) -> int:
         total = 0
@@ -125,19 +146,9 @@ def compact_zone(
     n_rows = df.count()
     files_before = _count_files(zone_path)
     n_files = max(1, math.ceil(n_rows / target_rows_per_file))
-    tmp = zone_path.rstrip("/") + "__compacting"
-    shutil.rmtree(tmp, ignore_errors=True)
-    if n_rows == 0:
-        # same guard as expire_zone: a zero-row PARTITIONED write
-        # emits only _SUCCESS (UNABLE_TO_INFER_SCHEMA on read-back);
-        # one un-partitioned empty part file keeps the zone readable
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    else:
-        writer = df.repartition(n_files).write.mode("overwrite")
-        if partition_col:
-            writer = writer.partitionBy(partition_col)
-        writer.parquet(tmp)
-    _swap_zone(zone_path, tmp)
+    _rewrite_zone(
+        df.repartition(n_files), n_rows == 0, zone_path, "__compacting", partition_col
+    )
     return {
         "rows": n_rows,
         "files_before": files_before,
@@ -163,9 +174,6 @@ def expire_zone(
     a transactional format this becomes a DELETE WHERE. Returns row
     counts.
     """
-    import os
-    import shutil
-
     from pyspark.sql import functions as F
 
     df = spark.read.parquet(zone_path)
@@ -178,19 +186,7 @@ def expire_zone(
         F.col(ts_col).isNull() | (F.col(ts_col) >= F.lit(cutoff))
     )
     kept = kept_df.count()
-    tmp = zone_path.rstrip("/") + "__expiring"
-    shutil.rmtree(tmp, ignore_errors=True)
-    if kept == 0:
-        # a fully-partitioned empty write emits only _SUCCESS, which is
-        # unreadable (UNABLE_TO_INFER_SCHEMA); a single un-partitioned
-        # empty part file keeps the zone readable with its schema
-        kept_df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    else:
-        writer = kept_df.write.mode("overwrite")
-        if partition_col:
-            writer = writer.partitionBy(partition_col)
-        writer.parquet(tmp)
-    _swap_zone(zone_path, tmp)
+    _rewrite_zone(kept_df, kept == 0, zone_path, "__expiring", partition_col)
     return {"rows_before": total, "rows_kept": kept, "rows_expired": total - kept}
 
 

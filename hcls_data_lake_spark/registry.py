@@ -13,6 +13,7 @@ order-insensitive and sorts columns by name).
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -54,8 +55,8 @@ def _ensure_tuned(spark: SparkSession) -> None:
         }
         for k, v in defaults.items():
             spark.conf.set(k, v)
-    except Exception:
-        pass  # a locked-down session still runs, just less tuned
+    except Exception:  # a locked-down session still runs, just less tuned
+        logging.getLogger(__name__).debug("session tuning failed", exc_info=True)
     _TUNED_SESSIONS.add(key)
 
 

@@ -10,6 +10,7 @@ endpoint.
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 import threading
@@ -121,7 +122,7 @@ def _evict_state_providers(spark: SparkSession) -> None:
         jvm = spark._jvm
         jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     except Exception:  # noqa: BLE001 — hygiene only, never fail a run
-        pass
+        logging.getLogger(__name__).debug("provider eviction failed", exc_info=True)
 
 
 def run_to_memory(

@@ -1463,6 +1463,45 @@ def test_ann_index_cache_is_transparent(spark):
         assert warm1 == warm2 == cold, name
 
 
+def test_build_once_cache_evicts_skips_and_clears(spark):
+    """The shared build-once cache behind the codebook, ANN index and
+    near-dup graph stores: going past the bound evicts the OLDEST entry
+    (FIFO — a hit does not refresh it) and frees its blocks; a None
+    table identity builds but stores nothing; clear() unpersists every
+    frame it held."""
+    from pyspark import StorageLevel
+
+    from hcls_data_lake_spark.operators.materialize import BuildOnceCache
+
+    cache = BuildOnceCache(2)
+    built = []
+
+    def build(n):
+        def _b():
+            built.append(n)
+            return spark.range(n)
+
+        return _b
+
+    a = cache.get_or_build(("a",), build(1), spark)
+    b = cache.get_or_build(("b",), build(2), spark)
+    assert a.storageLevel != StorageLevel.NONE
+    assert cache.get_or_build(("a",), build(1), spark) is a
+    c = cache.get_or_build(("c",), build(3), spark)
+    assert a.storageLevel == StorageLevel.NONE
+    assert [k[1:] for k in cache] == [("b",), ("c",)]
+
+    loose = cache.get_or_build((None, "x"), build(4), spark)
+    assert loose.storageLevel == StorageLevel.NONE
+    assert len(cache) == 2
+
+    cache.clear()
+    assert len(cache) == 0
+    assert b.storageLevel == StorageLevel.NONE
+    assert c.storageLevel == StorageLevel.NONE
+    assert built == [1, 2, 3, 4]
+
+
 def test_bloom_md5_census_consistency_and_fpr(spark):
     """q_sketch_bloom_md5: no false NEGATIVES (every true member
     passes — the Bloom guarantee; n_true must equal the exact

@@ -5,7 +5,10 @@ names given on the command line (this round's additions, no driver row
 yet) go first, then every other currently-listed name ordered by the
 round of its LATEST driver CORRECTNESS row (stalest first; current
 list position breaks ties), so a 50-name driver prefix always refreshes
-the new names plus the stalest legacy evidence.
+the new names plus the stalest legacy evidence. Names whose registry
+oracle is None go after every oracled name: the driver can only
+rows-check them, so they would spend prefix slots without certifying
+anything.
 
     python tools/rotate_representatives.py [new_name ...]
 
@@ -26,6 +29,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
+    from hcls_data_lake_spark import registry
+
     new_names = sys.argv[1:]
     path = os.path.join(REPO, "hcls_data_lake_spark", "registry.py")
     src = open(path).read()
@@ -45,7 +50,10 @@ def main() -> None:
     known = set(names) | set(new_names)
     rest = [n for n in names if n not in set(new_names)]
     rest.sort(key=lambda n: (latest.get(n, 0), pos.get(n, 0)))
-    ordered = list(new_names) + rest
+    registry._load_all()
+    ordered = sorted(
+        list(new_names) + rest, key=lambda n: registry.REGISTRY[n].oracle is None
+    )
     assert len(set(ordered)) == len(ordered), "duplicate names"
     assert set(ordered) == known
 
